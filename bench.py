@@ -246,6 +246,15 @@ def _delete_suite(spark, results: dict, idx_dir: str, corpus) -> None:
     dm = tombstone_delete(spark, idx_dir, conv_ids=dead, corpus=corpus)
     t_tomb = time.time() - t0
     results["delete_tombstone_1pct"] = round(t_tomb, 3)
+    if dm.n_deleted_total == 0:
+        # the crc32 selector matched no conversation (tiny SF): nothing to
+        # serve around or purge — purge_deletes would refuse the index, so
+        # record the suite as skipped instead of aborting the whole bench
+        results["_delete"] = {
+            "skipped": "crc32 selector matched no conversation",
+            "n_deleted": 0,
+        }
+        return
     lex = (
         pds.dataset(os.path.join(idx_dir, "lexicon"), partitioning="hive")
         .to_table(columns=["term", "df"])

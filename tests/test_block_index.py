@@ -52,7 +52,7 @@ def reader(index_dir, request):
       pool — the dense-cold-query scale path);
     - wand: block-at-a-time block-max WAND for disjunctive (taat_threshold=0
       routes everything there; dense_docs_max=0 disables the TAAT bail-out
-      so pruning logic is fully exercised) + galloping conjunctive."""
+      so pruning logic is fully exercised) + rare-lead conjunctive."""
     if request.param == "taat":
         r = BlockIndexReader(index_dir)
     elif request.param == "taat_sparse":
@@ -307,11 +307,17 @@ def test_shard_cuts_inside_blocks_with_tiny_row_groups(index_dir, fixture):
             if not present:
                 continue
             for conj in (True, False):
-                want = r._search_taat(present, lex, 1000, conj)
+                want = r._ranked(
+                    *r._score_topk(r._fetch_arrays(present), lex, 1000, conj)
+                )
                 n = r.n_docs
                 for cut in range(1, n, max(1, n // 13)):
-                    d0, s0 = r._taat_range_topk(present, 1000, conj, 0, cut)
-                    d1, s1 = r._taat_range_topk(present, 1000, conj, cut, n)
+                    # each shard: the doc-range fetch into the shared
+                    # scorer, compressed accumulator only (as the workers)
+                    d0, s0 = r._score_topk(r._fetch_range(present, 0, cut),
+                                           lex, 1000, conj, allow_flat=False)
+                    d1, s1 = r._score_topk(r._fetch_range(present, cut, n),
+                                           lex, 1000, conj, allow_flat=False)
                     cand = np.concatenate([d0, d1])
                     sc = np.concatenate([s0, s1])
                     cand, sc = r._topk_arrays(cand, sc, 1000)
@@ -617,8 +623,8 @@ def test_wand_metadata_fetch_is_bounded_on_hot_term(spark, tmp_path_factory):
 
 
 def test_conjunctive_cursor_fetch_is_bounded(spark, tmp_path_factory):
-    """Galloping conjunctive over (rare AND hot): the two-level cursors must
-    fetch the hot term's leaf data only for superblocks the rare lead's
+    """Rare-lead conjunction over (rare AND hot): the lead-pruned fetch must
+    read the hot term's leaf data only for superblocks the rare lead's
     docIDs actually land in — never the hot term's whole posting list."""
     import pandas as pd
 

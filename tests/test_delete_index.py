@@ -4,7 +4,7 @@ Two invariants, both against an honest FROM-SCRATCH build on the
 surviving corpus:
 - tombstone_delete: the untouched index + sidecar must serve rankings
   with BITWISE-equal BM25 scores on every serving path (TAAT dense +
-  sparse, block-max WAND, galloping conjunctive, parallel decode) — the
+  sparse, block-max WAND, rare-lead conjunctive, parallel decode) — the
   sidecar carries exact integer corrections, so N / avg_dl / df come out
   identical to the rebuild's;
 - purge_deletes: the physical rewrite must be CONTENT-IDENTICAL (payload
@@ -96,7 +96,7 @@ QUERIES = [
     ("the data", False),
     ("the data", True),
     ("spark block query", False),
-    ("tombstone the", True),   # rare lead → galloping intersection
+    ("tombstone the", True),   # rare lead → lead-pruned conjunction
     ("delete live", True),
     ("absent the", False),
 ]
@@ -278,6 +278,41 @@ def test_purge_guards(spark, deleted_vs_scratch):
         purge_deletes(spark, str(root / "full"), str(root / "full"))
     with pytest.raises(ValueError, match="no tombstones"):
         purge_deletes(spark, str(root / "scratch"), str(root / "p2"))
+
+
+def test_purge_with_swapped_arguments_leaves_live_index_intact(spark, tmp_path):
+    """purge_deletes validates ``index_dir`` before it touches ``out_dir``:
+    called with the two roots swapped (a fresh location as the input, the
+    live tombstoned index as the output) it must raise WITHOUT clearing
+    the live index's sidecar — which would silently un-delete its docs.
+    The merge's output-side sidecar clear follows the same rule."""
+    import os
+
+    def tree(d):
+        return sorted(
+            (os.path.relpath(os.path.join(p, f), d), os.path.getsize(os.path.join(p, f)))
+            for p, _dirs, fs in os.walk(d)
+            for f in fs
+        )
+
+    live = str(tmp_path / "idx")
+    kw = dict(resume=False, n_buckets=8, num_partitions=4, store_texts=True)
+    build_block_index(_tdf(spark, 10), live, build_id="f", **kw)
+    tombstone_delete(spark, live, conv_ids=["c001", "c004"])
+    sidecar = tree(os.path.join(live, "deletes"))
+    r = BlockIndexReader(live)
+    before = [r.search(q, conjunctive=conj, k=100) for q, conj in QUERIES]
+    with pytest.raises(ValueError, match="no tombstones"):
+        purge_deletes(spark, str(tmp_path / "fresh"), live)
+    with pytest.raises(Exception):
+        merge_block_indexes(
+            spark, str(tmp_path / "fresh"), str(tmp_path / "fresh2"), live
+        )
+    assert has_tombstones(live)
+    assert tree(os.path.join(live, "deletes")) == sidecar
+    r2 = BlockIndexReader(live)
+    assert r2.n_docs_live == 32
+    assert [r2.search(q, conjunctive=conj, k=100) for q, conj in QUERIES] == before
 
 
 def test_delete_all_docs_serves_empty_and_purges(spark, tmp_path):
@@ -517,9 +552,9 @@ def test_search_full_with_snippets_on_tombstoned_index(deleted_vs_scratch):
 
 
 def test_gallop_cursor_survives_fully_tombstoned_tail_blocks(spark, tmp_path):
-    """next_geq landing in a block whose every posting (and every later
-    block) is tombstoned must exhaust the cursor (INF), not crash on the
-    searchsorted of a None ids array."""
+    """A rare-lead conjunction whose lead doc lands in a fully tombstoned
+    block (followed only by fully tombstoned blocks) of the dense term
+    must answer [], not crash."""
     rows = []
     for c in range(200):
         text = "marker words only" if c == 150 else "common filler words"
@@ -533,8 +568,8 @@ def test_gallop_cursor_survives_fully_tombstoned_tail_blocks(spark, tmp_path):
     dead = [f"c{c:03d}" for c in range(128, 200) if c != 150]
     tombstone_delete(spark, str(root / "full"), conv_ids=dead)
     r = BlockIndexReader(str(root / "full"))
-    # conjunctive gallop: lead "marker" (df 1, doc 150) forces
-    # common.next_geq(150) into the fully-deleted block
+    # rare-lead conjunction: lead "marker" (df 1, doc 150) lands in
+    # common's fully-deleted block
     assert r.search("marker common", conjunctive=True) == []
     # scratch agreement on the same query set
     build_block_index(

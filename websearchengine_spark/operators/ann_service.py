@@ -21,12 +21,9 @@ import numpy as np
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
+from websearchengine_spark.operators.semantic_service import _seq_dot
 from websearchengine_spark.operators.wand import _LRU
 from websearchengine_spark.pipeline.similarity import plane_signs
-
-
-def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    return np.cumsum(a * b, axis=1)[:, -1]
 
 
 class AnnService:

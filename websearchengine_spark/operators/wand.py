@@ -7,14 +7,19 @@ upgraded from decode-everything-then-full-sort (main.cpp:584-630) to:
 - partition-pruned block fetch: only the query terms' buckets/blocks are read
   (pyarrow dataset over the hive-partitioned blocks table — the analogue of
   the lexicon-offset fseek, main.cpp:120-173);
-- lazy per-block varbyte+delta decode with an LRU posting cache
-  (main.cpp:466 posting cache analogue);
-- galloping (searchsorted) posting-list intersection for conjunctive mode
-  (main.cpp:599-607's std::set_intersection, now with block skip pointers);
-- vectorized term-at-a-time scoring with a **candidate-bounded accumulator**
-  for machine-reasonable posting volumes: memory is O(Σ candidate postings),
-  never O(n_docs) (a flat dense accumulator is used only while n_docs is
-  driver-RAM-sized — the 10^12-doc scale path is the compressed one);
+- one block decoder (:meth:`BlockIndexReader._decode_blocks`: concatenated
+  varbyte decode, block-head gap arithmetic, tombstone mask) behind an LRU
+  posting cache (main.cpp:466 posting cache analogue);
+- ONE term-at-a-time scorer core (:meth:`BlockIndexReader._score_topk`)
+  fed by three fetchers — the full posting lists, one doc-range shard
+  (the parallel workers), and the lead-pruned fetch of a conjunction with
+  a rare lead term, which decodes the rarest list plus only the other
+  terms' leaf blocks covering its docIDs (main.cpp:599-607's
+  std::set_intersection, with block skip pointers instead of cursors).
+  Contributions are vectorized numpy with a **candidate-bounded
+  accumulator**: memory is O(Σ candidate postings), never O(n_docs) (a
+  flat dense accumulator is used only while n_docs is driver-RAM-sized —
+  the 10^12-doc scale path is the compressed one);
 - **block-at-a-time block-max WAND** for large disjunctions: candidate
   blocks are selected from block-max metadata and scored as whole numpy
   batches — no doc-at-a-time Python loop. Exact under the reference's
@@ -41,7 +46,6 @@ import math
 import os
 import threading
 import time
-from bisect import bisect_left
 from collections import OrderedDict
 from dataclasses import dataclass
 
@@ -56,14 +60,12 @@ from websearchengine_spark.functions.tokenizer import clean_query
 from websearchengine_spark.plans.block_index import BlockIndexPaths, term_bucket
 
 # BM25 parameters and THE shared tf-component expression (plans/build.py):
-# every scorer here (per-posting ``contrib``, TAAT, range-sharded TAAT, the
-# WAND decode loop) routes through the ONE site the block encoder also uses
-# for its stored bounds — cross-path rank identity and the exactness of
-# strict bound < θ pruning hold at ulp boundaries only while the float
-# expression tree is literally identical everywhere.
-from websearchengine_spark.plans.build import B, K1, tf_component as _tf_component
-
-INF = 1 << 62
+# every scorer here (the TAAT core, the WAND decode loop) routes through
+# the ONE site the block encoder also uses for its stored bounds —
+# cross-path rank identity and the exactness of strict bound < θ pruning
+# hold at ulp boundaries only while the float expression tree is literally
+# identical everywhere.
+from websearchengine_spark.plans.build import tf_component as _tf_component
 
 
 class _BucketRGs:
@@ -264,157 +266,28 @@ class _Leaf:
     dls_vb: list
 
 
-class TermCursor:
-    """Two-level cursor over one term's ordered posting blocks: superblock
-    skip (bisect over ~128-block summaries) → leaf-block skip (bisect within
-    the superblock) → lazy varbyte decode of the one landing block. Leaf
-    metadata + payloads are fetched per SUPERBLOCK on demand through the
-    reader (LRU-shared across queries), so a cursor over a 10^9-posting
-    stopword term materializes O(df / 16384) superblock rows up front and
-    only the leaf data its skips actually land in — never the whole list.
-    Used by the galloping conjunctive path (selective queries); the
-    disjunctive paths are block/array-vectorized and bypass cursors."""
+def _rows_by_term(tbl: pa.Table, terms) -> dict[str, np.ndarray]:
+    """term → its row indices in ``tbl`` (columns term, doc_lo) in doc_lo
+    order; empty for a term without rows."""
+    lo = tbl.column("doc_lo").to_numpy()
+    per: dict[str, list[int]] = {t: [] for t in terms}
+    for i, t in enumerate(tbl.column("term").to_pylist()):
+        if t in per:
+            per[t].append(i)
+    return {
+        t: np.array(ix, dtype=np.int64)[np.argsort(lo[ix], kind="stable")]
+        for t, ix in per.items()
+    }
 
-    __slots__ = ("term", "df", "idf", "avg_dl", "reader", "sb_los", "sb_his",
-                 "sbi", "leaf", "bi", "pos", "ids", "tfs", "dls")
 
-    def __init__(self, term: str, df: int, idf: float, avg_dl: float,
-                 reader: "BlockIndexReader", sbm):
-        self.term = term
-        self.df = df
-        self.idf = idf
-        self.avg_dl = avg_dl
-        self.reader = reader
-        self.sb_los, self.sb_his = sbm[0], sbm[1]
-        # LAZY: no leaf data is fetched until a skip actually lands in a
-        # superblock — a cursor that galloping immediately jumps past its
-        # first superblocks never touches their leaf blocks at all
-        self.sbi = 0
-        self.leaf = None
-        self.ids = None
-        self.bi = 0
-        self.pos = 0
-
-    def _enter_sb(self, sbi: int):
-        if sbi >= len(self.sb_his):
-            self.sbi = len(self.sb_his)
-            self.ids = None
-            return
-        self.sbi = sbi
-        self.leaf = self.reader._leaf_for(self.term, sbi)
-        self.bi = 0
-        self.pos = 0
-        self._decode()
-
-    def _decode(self):
-        # loop, not recursion: consecutive blocks (or whole superblocks)
-        # fully emptied by tombstones are skipped iteratively
-        while True:
-            leaf = self.leaf
-            if self.bi >= len(leaf.his):
-                # past the superblock's last block → first of the next
-                sbi = self.sbi + 1
-                if sbi >= len(self.sb_his):
-                    self.sbi = sbi
-                    self.ids = None
-                    return
-                self.sbi = sbi
-                self.leaf = self.reader._leaf_for(self.term, sbi)
-                self.bi = 0
-                self.pos = 0
-                continue
-            i = self.bi
-            # ids_vb holds gaps with the block head measured from doc_lo - 1
-            ids = (
-                np.int64(leaf.los[i] - 1)
-                + np.cumsum(
-                    vb_decode(leaf.ids_vb[i]), dtype=np.uint64
-                ).astype(np.int64)
-            )
-            keep = self.reader._del_mask(ids)
-            if keep is None:
-                self.ids = ids
-                self.tfs = vb_decode(leaf.tfs_vb[i])
-                self.dls = vb_decode(leaf.dls_vb[i])
-                return
-            ids = ids[keep]
-            if len(ids) == 0:  # block fully tombstoned → skip
-                self.bi += 1
-                continue
-            self.ids = ids
-            self.tfs = vb_decode(leaf.tfs_vb[i])[keep]
-            self.dls = vb_decode(leaf.dls_vb[i])[keep]
-            return
-
-    def cur_doc(self) -> int:
-        if self.sbi >= len(self.sb_his):
-            return INF
-        if self.ids is None:
-            self._enter_sb(self.sbi)
-            if self.ids is None:
-                return INF
-        return int(self.ids[self.pos])
-
-    def next_geq(self, target: int) -> int:
-        """Advance to the first posting with doc_id ≥ target (galloping:
-        bisect superblock doc_hi pointers — WITHOUT loading skipped
-        superblocks — then leaf doc_hi pointers, then searchsorted inside
-        the one decoded block)."""
-        if self.sbi >= len(self.sb_his):
-            return INF
-        if self.ids is not None and target <= int(self.ids[self.pos]):
-            return int(self.ids[self.pos])
-        if target > self.sb_his[self.sbi]:
-            sbi = bisect_left(self.sb_his, target, lo=self.sbi + 1)
-            if sbi >= len(self.sb_his):
-                self.sbi = len(self.sb_his)
-                self.ids = None
-                return INF
-            self.sbi = sbi
-            self.leaf = None
-            self.ids = None
-            self.bi = 0
-            self.pos = 0
-        if self.ids is None:
-            self._enter_sb(self.sbi)
-            if self.ids is None:
-                return INF
-        bi = bisect_left(self.leaf.his, target, lo=self.bi)
-        if bi >= len(self.leaf.his):  # safety: gap at superblock tail
-            self._enter_sb(self.sbi + 1)
-            return self.cur_doc()
-        if bi != self.bi:
-            self.bi = bi
-            self._decode()
-            self.pos = 0
-            if self.ids is None:  # landing block + every later one fully
-                return INF        # tombstoned → term exhausted
-        self.pos = int(np.searchsorted(self.ids, target, side="left"))
-        if self.pos >= len(self.ids):  # gap between blocks
-            self.bi += 1
-            self.pos = 0
-            self._decode()
-            if self.ids is None:
-                return INF
-        return int(self.ids[self.pos])
-
-    def advance(self) -> int:
-        return self.next_geq(self.cur_doc() + 1)
-
-    def contrib(self) -> float:
-        """Exact BM25 contribution at the current posting — identical float
-        expression tree to the oracle (main.cpp:446-450)."""
-        tf = float(self.tfs[self.pos])
-        dl = float(self.dls[self.pos])
-        return self.idf * _tf_component(tf, dl, self.avg_dl)
-
-    def block_ub(self) -> float:
-        i = self.bi
-        r = self.reader  # tombstone avg_dl drift factors (1.0 when none)
-        return max(
-            self.idf * self.leaf.max_tfc[i] * r._bf_hi,
-            self.idf * self.leaf.min_tfc[i] * r._bf_lo,
-        )
+def _leaf_columns(picks) -> list[list]:
+    """[(leaf, j)] → the (doc_lo, n, ids_vb, tfs_vb, dls_vb) column lists
+    of those leaf blocks, in order — the argument layout of
+    :meth:`BlockIndexReader._decode_blocks`."""
+    return [
+        [getattr(leaf, f)[j] for leaf, j in picks]
+        for f in ("los", "ns", "ids_vb", "tfs_vb", "dls_vb")
+    ]
 
 
 class BlockIndexReader:
@@ -454,17 +327,9 @@ class BlockIndexReader:
         self._deleted: np.ndarray | None = None
         self._df_corr: dict[str, int] = {}
         self._bf_hi = self._bf_lo = 1.0
-        # trust deletes/ when present, else the crash-recovery
-        # deletes.prev/ left by a writer killed mid-swap (the old complete
-        # state — see delete_index.tombstone_delete's swap protocol)
-        ddir = self.paths.deletes
-        if not os.path.isdir(os.path.join(ddir, "meta")) and os.path.isdir(
-            os.path.join(ddir + ".prev", "meta")
-        ):
-            ddir = ddir + ".prev"
-        dmeta = os.path.join(ddir, "meta")
-        if os.path.isdir(dmeta):
-            dm = pq.read_table(dmeta).to_pylist()[0]
+        ddir = self.paths.live_deletes()
+        if ddir is not None:
+            dm = pq.read_table(os.path.join(ddir, "meta")).to_pylist()[0]
             n_del = int(dm["n_deleted"])
             if n_del:
                 self._deleted = np.sort(
@@ -608,49 +473,52 @@ class BlockIndexReader:
         tbl = tbl.filter(mask)
         return tbl if tbl.num_rows else None
 
-    def lexicon_rows(self, terms: list[str]) -> dict[str, int]:
-        if self._lex_ds is None:
-            return {}
-        # Collect values as DIRECT references; never read back through the
-        # cache after a put. A put may evict another query term's entry (a
-        # cache-hit probe does not refresh LRU recency), and a read-back
-        # would then silently treat that term as OOV and drop it from the
-        # query — observed as history-dependent wrong rankings at 367k-query
-        # eviction pressure. With direct references the LRU is a pure
-        # optimization: eviction can only cost a refetch, never an answer.
-        vals: dict[str, int | None] = {}
+    def _cached(self, kind: str, terms: list[str], fetch) -> dict:
+        """term → its LRU-cached ``(kind, term)`` value, the misses filled
+        by ONE ``fetch(missing)`` call (→ term → value; a term it omits is
+        cached as absent). Absent terms are omitted from the result.
+
+        Values are collected as DIRECT references and never read back
+        through the cache after a put. A put may evict another query
+        term's entry (a cache-hit probe does not refresh LRU recency), and
+        a read-back would then silently treat that term as absent and drop
+        it from the query — observed as history-dependent wrong rankings at
+        367k-query eviction pressure. With direct references the LRU is a
+        pure optimization: eviction can only cost a refetch, never an
+        answer."""
+        vals = {}
         for t in terms:
-            hit, v = self._posting_cache.get2(("lex", t))
+            hit, v = self._posting_cache.get2((kind, t))
             if hit:
                 vals[t] = v
         missing = [t for t in terms if t not in vals]
         if missing:
+            found = fetch(missing)
+            for t in missing:
+                vals[t] = found.get(t)
+                self._posting_cache.put((kind, t), vals[t])
+        return {t: v for t in terms if (v := vals.get(t)) is not None}
+
+    def lexicon_rows(self, terms: list[str]) -> dict[str, int]:
+        if self._lex_ds is None:
+            return {}
+
+        def fetch(missing):
             tbl = self._pruned_read(
                 self._lex_rgs, self.paths.lexicon, missing, ["term", "df"]
             )
-            found = (
-                dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
-                if tbl is not None
-                else {}
-            )
-            for t in missing:
-                v = found.get(t)
-                self._posting_cache.put(("lex", t), v)
-                vals[t] = v
+            if tbl is None:
+                return {}
+            return dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
+
+        dfs = self._cached("lex", terms, fetch)
         if self._df_corr:
             # tombstone df corrections: the cache keeps RAW dfs (sidecar
             # state is fixed per reader instance); a term whose every doc
             # is deleted becomes OOV, exactly as a rebuilt index drops it
-            out: dict[str, int] = {}
-            for t in terms:
-                v = vals.get(t)
-                if v is None:
-                    continue
-                v -= self._df_corr.get(t, 0)
-                if v > 0:
-                    out[t] = v
-            return out
-        return {t: v for t in terms if (v := vals.get(t)) is not None}
+            dfs = {t: v - self._df_corr.get(t, 0) for t, v in dfs.items()}
+            return {t: v for t, v in dfs.items() if v > 0}
+        return dfs
 
     def _del_mask(self, ids: np.ndarray):
         """Keep-mask for decoded docIDs against the tombstone set — None
@@ -670,50 +538,31 @@ class BlockIndexReader:
         """term → (los, his, ns, max_tfc, min_tfc) superblock arrays sorted
         by doc_lo (kind=1 rows — O(df / (block_size · SUPERBLOCK_FACTOR))
         rows per term, the ONLY per-term-proportional metadata a query ever
-        loads eagerly). LRU-cached; values are collected as direct
-        references (see lexicon_rows: a put may evict another query term's
-        entry, so a read-back-after-put can silently drop a term)."""
-        vals: dict[str, tuple | None] = {}
-        for t in terms:
-            hit, v = self._posting_cache.get2(("sbm", t))
-            if hit:
-                vals[t] = v
-        missing = [t for t in terms if t not in vals]
-        if missing:
+        loads eagerly). LRU-cached (see _cached)."""
+
+        def fetch(missing):
             tbl = self._pruned_read(
                 self._block_rgs, self.paths.blocks, missing,
                 ["kind", "term", "doc_lo", "doc_hi", "n", "max_tfc", "min_tfc"],
                 kind=1,
             )
             if tbl is None:
-                for t in missing:
-                    self._posting_cache.put(("sbm", t), None)
-                    vals[t] = None
-                return {t: v for t in terms if (v := vals.get(t)) is not None}
+                return {}
             self.sb_rows_fetched += tbl.num_rows
-            tcol = tbl.column("term").to_pylist()
-            lo = tbl.column("doc_lo").to_numpy()
-            hi = tbl.column("doc_hi").to_numpy()
-            ns = tbl.column("n").to_numpy()
-            mx = tbl.column("max_tfc").to_numpy()
-            mn = tbl.column("min_tfc").to_numpy()
-            per: dict[str, list[int]] = {t: [] for t in missing}
-            for i, t in enumerate(tcol):
-                per[t].append(i)
-            for t in missing:
-                idxs = per.get(t, [])
-                if not idxs:
-                    self._posting_cache.put(("sbm", t), None)
-                    vals[t] = None
-                    continue
-                o = np.array(idxs)[np.argsort(lo[idxs], kind="stable")]
-                v = (
+            lo, hi, ns, mx, mn = (
+                tbl.column(c).to_numpy()
+                for c in ("doc_lo", "doc_hi", "n", "max_tfc", "min_tfc")
+            )
+            return {
+                t: (
                     lo[o].astype(np.int64), hi[o].astype(np.int64),
                     ns[o].astype(np.int64), mx[o], mn[o],
                 )
-                self._posting_cache.put(("sbm", t), v)
-                vals[t] = v
-        return {t: v for t in terms if (v := vals.get(t)) is not None}
+                for t, o in _rows_by_term(tbl, missing).items()
+                if len(o)
+            }
+
+        return self._cached("sbm", terms, fetch)
 
     def _fetch_leaf_batch(
         self, wants: list[tuple[str, int, int, int]]
@@ -726,7 +575,7 @@ class BlockIndexReader:
         exact membership test. Returns the leaves fetched THIS call as
         direct references (callers needing a specific slot must not read it
         back through the LRU — a later put in the same batch may already
-        have evicted it; see lexicon_rows)."""
+        have evicted it; see _cached)."""
         fetched: dict[tuple[str, int], _Leaf] = {}
         todo = [w for w in wants if ("leaf", w[0], w[1]) not in self._posting_cache]
         if not todo:
@@ -749,38 +598,21 @@ class BlockIndexReader:
                 for t, ranges in by_term.items()
             },
         )
-        if tbl is None:
-            for t, ranges in by_term.items():
-                for si, _lo, _hi in ranges:
-                    empty = _Leaf(
-                        np.array([], dtype=np.int64),
-                        np.array([], dtype=np.int64),
-                        np.array([], dtype=np.int64),
-                        np.array([]), np.array([]), [], [], [],
-                    )
-                    self._posting_cache.put(("leaf", t, si), empty)
-                    fetched[(t, si)] = empty
-            return fetched
-        tcol = tbl.column("term").to_pylist()
-        lo = tbl.column("doc_lo").to_numpy()
-        hi = tbl.column("doc_hi").to_numpy()
-        ns = tbl.column("n").to_numpy()
-        mx = tbl.column("max_tfc").to_numpy()
-        mn = tbl.column("min_tfc").to_numpy()
-        ids_vb = tbl.column("ids_vb").to_pylist()
-        tfs_vb = tbl.column("tfs_vb").to_pylist()
-        dls_vb = tbl.column("dls_vb").to_pylist()
-        per: dict[str, list[int]] = {t: [] for t in by_term}
-        for i, t in enumerate(tcol):
-            per[t].append(i)
-        for t, ranges in by_term.items():
-            idxs = per.get(t, [])
-            o = (
-                np.array(idxs)[np.argsort(lo[idxs], kind="stable")]
-                if idxs
-                else np.array([], dtype=np.int64)
+        lo = hi = ns = mx = mn = np.empty(0, dtype=np.int64)
+        ids_vb = tfs_vb = dls_vb = []
+        rows = {}
+        if tbl is not None:
+            lo, hi, ns, mx, mn = (
+                tbl.column(c).to_numpy()
+                for c in ("doc_lo", "doc_hi", "n", "max_tfc", "min_tfc")
             )
-            slos = lo[o] if len(o) else np.array([], dtype=np.int64)
+            ids_vb, tfs_vb, dls_vb = (
+                tbl.column(c).to_pylist() for c in ("ids_vb", "tfs_vb", "dls_vb")
+            )
+            rows = _rows_by_term(tbl, by_term)
+        for t, ranges in by_term.items():
+            o = rows.get(t, np.empty(0, dtype=np.int64))
+            slos = lo[o]
             for si, sb_lo, sb_hi in ranges:
                 a = int(np.searchsorted(slos, sb_lo, side="left"))
                 b = int(np.searchsorted(slos, sb_hi, side="right"))
@@ -803,12 +635,12 @@ class BlockIndexReader:
 
     def _leaf_for(self, term: str, sb_idx: int) -> _Leaf:
         """The leaf blocks of one (term, superblock) — LRU hit or a single
-        on-demand fetch (cursors prefetch in batches; this is the miss
-        path). Loop, not a single try: under concurrent readers another
-        thread may have fetched the slot between our miss and our fetch
-        (its presence makes our fetch a no-op), then an eviction can take
-        it before our re-read — the next iteration simply fetches it
-        ourselves and returns the direct reference."""
+        on-demand fetch (callers prefetch in batches — see _leaves; this
+        is the miss path). Loop, not a single try: under concurrent
+        readers another thread may have fetched the slot between our miss
+        and our fetch (its presence makes our fetch a no-op), then an
+        eviction can take it before our re-read — the next iteration
+        simply fetches it ourselves and returns the direct reference."""
         while True:
             leaf = self._posting_cache.get_(("leaf", term, sb_idx))
             if leaf is not None:
@@ -820,138 +652,120 @@ class BlockIndexReader:
             if got is not None:
                 return got
 
+    def _leaves(self, need: dict[str, list[int]], sbms) -> dict[tuple[str, int], _Leaf]:
+        """(term, sb_index) → that superblock's leaf blocks, for every
+        superblock in ``need`` (term → sb indexes). One batched read
+        fetches the misses — for a term with ≤ ``prefetch_sbs`` superblocks
+        ALL of them, a bounded eager read later queries reuse — and every
+        value is a direct reference (see _leaf_for)."""
+        got = self._fetch_leaf_batch([
+            (t, si, int(sbms[t][0][si]), int(sbms[t][1][si]))
+            for t, sis in need.items()
+            for si in (range(len(sbms[t][0])) if len(sbms[t][0]) <= self.prefetch_sbs else sis)
+        ])
+        return {
+            (t, si): got.get((t, si)) or self._leaf_for(t, si)
+            for t, sis in need.items()
+            for si in sis
+        }
+
     def _fetch_arrays(self, terms: list[str]) -> dict[str, tuple]:
         """term → decoded (ids:int64, tfs:f64, dls:f64) full posting arrays,
-        LRU-cached. Columnar fetch — no per-block Python objects (building a
-        _Block per row costs more than decoding for dense lists), one
-        segmented vb_decode per column. Values are collected as direct
-        references (see lexicon_rows: a put may evict another query term's
-        entry, so a read-back-after-put can silently drop a term)."""
-        vals: dict[str, tuple | None] = {}
-        for t in terms:
-            hit, v = self._posting_cache.get2(("arr", t))
-            if hit:
-                vals[t] = v
-        missing = [t for t in terms if t not in vals]
-        if missing:
+        LRU-cached (see _cached) — the full-list fetcher of the TAAT route,
+        shared with match_count and result_freqs. Columnar fetch: no
+        per-block Python objects, one concatenated decode per column."""
+
+        def fetch(missing):
             tbl = self._pruned_read(
                 self._block_rgs, self.paths.blocks, missing,
                 ["kind", "term", "doc_lo", "n", "ids_vb", "tfs_vb", "dls_vb"],
                 kind=0,
             )
             if tbl is None:
-                for t in missing:
-                    self._posting_cache.put(("arr", t), None)
-                    vals[t] = None
-                return {t: v for t in terms if (v := vals.get(t)) is not None}
+                return {}
             self.leaf_rows_fetched += tbl.num_rows
-            decoded = self._decode_posting_table(tbl, missing)
-            for t in missing:
-                v = decoded.get(t)
-                self._posting_cache.put(("arr", t), v)
-                vals[t] = v
-        return {t: v for t in terms if (v := vals.get(t)) is not None}
+            return self._decode_posting_table(tbl, missing)
+
+        return self._cached("arr", terms, fetch)
+
+    def _decode_blocks(self, los, ns, ids_vb, tfs_vb, dls_vb):
+        """THE block decoder: leaf blocks of ONE term, in doc_lo order
+        (parallel columns doc_lo, n and the three varbyte payloads) →
+        (ids:int64, tfs:f64, dls:f64, bounds) with tombstoned postings
+        masked out; ``bounds[i]:bounds[i+1]`` is block i's slice of the
+        (masked) arrays. One concatenated vb_decode per column (per-block
+        calls cost ~10 µs each). Every serving decode site — the full-list
+        and doc-range fetchers, the lead-pruned conjunction and the WAND
+        miss path — goes through here."""
+        ns = np.asarray(ns, dtype=np.int64)
+        bounds = np.concatenate(([0], np.cumsum(ns)))
+        starts = bounds[:-1]
+        raw = vb_decode(b"".join(ids_vb))
+        cs = np.cumsum(raw, dtype=np.uint64)
+        # block-head gaps are measured from (doc_lo - 1), so the per-block
+        # offset folds the metadata base back in; uint64 wraparound in the
+        # intermediate is exact under mod-2^64
+        offsets = (
+            cs[starts] - raw[starts]
+            + np.uint64(1)
+            - np.asarray(los, dtype=np.int64).astype(np.uint64)
+        )
+        ids = (cs - np.repeat(offsets, ns)).astype(np.int64)
+        tfs = vb_decode(b"".join(tfs_vb)).astype(np.float64)
+        dls = vb_decode(b"".join(dls_vb)).astype(np.float64)
+        keep = self._del_mask(ids)
+        if keep is not None:  # tombstoned postings never score
+            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+            bounds = np.concatenate(([0], np.cumsum(keep)))[bounds]
+        return ids, tfs, dls, bounds
 
     def _decode_posting_table(self, tbl: pa.Table, terms: list[str]) -> dict[str, tuple]:
         """term → decoded (ids:int64, tfs:f64, dls:f64) posting arrays from
         leaf block rows (columns term, doc_lo, n, ids_vb, tfs_vb, dls_vb),
-        with tombstoned postings masked out. Columnar: one segmented
-        vb_decode per column per term, no per-block Python objects. No
-        caching — callers cache (or are one-shot range workers). Terms
-        with no (surviving) rows are simply absent from the result."""
+        tombstones masked. No caching — callers cache (or are one-shot
+        range workers). Terms with no (surviving) rows are simply absent
+        from the result."""
         out: dict[str, tuple] = {}
-        tcol = tbl.column("term").to_pylist()
         lo = tbl.column("doc_lo").to_numpy()
-        ns_all = tbl.column("n").to_numpy()
-        ids_vb = tbl.column("ids_vb").to_pylist()
-        tfs_vb = tbl.column("tfs_vb").to_pylist()
-        dls_vb = tbl.column("dls_vb").to_pylist()
-        per: dict[str, list[int]] = {t: [] for t in terms}
-        for i, t in enumerate(tcol):
-            if t in per:
-                per[t].append(i)
-        for t in terms:
-            idxs = sorted(per.get(t, []), key=lambda i: lo[i])
-            if not idxs:
+        ns = tbl.column("n").to_numpy()
+        vbs = [tbl.column(c).to_pylist() for c in ("ids_vb", "tfs_vb", "dls_vb")]
+        for t, o in _rows_by_term(tbl, terms).items():
+            if not len(o):
                 continue
-            ns = ns_all[idxs].astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
-            raw = vb_decode(b"".join(ids_vb[i] for i in idxs))
-            cs = np.cumsum(raw, dtype=np.uint64)
-            # block-head gaps are measured from (doc_lo - 1), so the
-            # per-block offset folds the metadata base back in; uint64
-            # wraparound in the intermediate is exact under mod-2^64
-            offsets = (
-                cs[starts] - raw[starts]
-                + np.uint64(1)
-                - lo[idxs].astype(np.uint64)
+            ids, tfs, dls, _ = self._decode_blocks(
+                lo[o], ns[o], *([col[i] for i in o.tolist()] for col in vbs)
             )
-            ids = (cs - np.repeat(offsets, ns)).astype(np.int64)
-            tfs = vb_decode(b"".join(tfs_vb[i] for i in idxs)).astype(np.float64)
-            dls = vb_decode(b"".join(dls_vb[i] for i in idxs)).astype(np.float64)
-            keep = self._del_mask(ids)
-            if keep is not None:
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                if len(ids) == 0:
-                    continue
-            out[t] = (ids, tfs, dls)
+            if len(ids):
+                out[t] = (ids, tfs, dls)
         return out
 
-    def _cursors(self, terms: list[str]) -> list[TermCursor]:
-        """Two-level cursors with lead-driven prefetch. The galloping
-        intersection only ever calls ``next_geq(d)`` for docIDs ``d`` of the
-        LEAD (rarest) term, so the exact set of superblocks every other
-        cursor will touch is known up front: the covering superblock of each
-        lead posting. Prefetching them in ONE batched read replaces what
-        would otherwise be O(superblocks-touched) round trips — and the
-        dense terms' untouched superblocks (the overwhelming majority at
-        stopword df) are never read at all, metadata or payload."""
-        lex = self.lexicon_rows(terms)
-        present = [t for t in terms if t in lex]  # OOV silently skipped
-        sbms = self._fetch_superblocks(present)
-        present = [t for t in present if t in sbms]
-        if not present:
-            return []
-        lead = min(present, key=lambda t: int(lex[t]))
-        l_los, l_his = sbms[lead][0], sbms[lead][1]
-        wants = [
-            (lead, i, int(l_los[i]), int(l_his[i])) for i in range(len(l_los))
-        ]
-        self._fetch_leaf_batch(wants)
-        # the lead's docIDs, decoded once (bounded by min_df — the router
-        # only picks the gallop path when that is small)
-        lead_ids = []
-        for i in range(len(l_los)):
-            leaf = self._leaf_for(lead, i)
-            for j in range(len(leaf.los)):
-                lead_ids.append(
-                    np.int64(leaf.los[j] - 1)
-                    + np.cumsum(
-                        vb_decode(leaf.ids_vb[j]), dtype=np.uint64
-                    ).astype(np.int64)
-                )
-        if lead_ids:
-            lead_docs = np.concatenate(lead_ids)
-            wants = []
-            for t in present:
-                if t == lead:
-                    continue
-                los, his = sbms[t][0], sbms[t][1]
-                if len(his) <= self.prefetch_sbs:
-                    sis = range(len(his))
-                else:
-                    cover = np.unique(np.searchsorted(his, lead_docs, side="left"))
-                    sis = cover[cover < len(his)].tolist()
-                for si in sis:
-                    wants.append((t, si, int(los[si]), int(his[si])))
-            self._fetch_leaf_batch(wants)
-        cursors = []
-        for t in present:
-            df = int(lex[t])
-            cursors.append(
-                TermCursor(t, df, self._idf(df), self.avg_dl, self, sbms[t])
+    def _fetch_range(self, terms: list[str], doc_lo: int, doc_hi: int) -> dict[str, tuple]:
+        """term → decoded (ids, tfs, dls) of the postings with docID in
+        [doc_lo, doc_hi) — a parallel worker's fetch. Range-pruned leaf
+        read (row groups outside the range never decode — the doc_lo
+        statistics prune within single-term groups), no caching. EVERY
+        term gets an entry, empty when it has no posting in the range, so
+        the conjunctive scorer rules out every doc of the shard."""
+        empty = (np.empty(0, dtype=np.int64), np.empty(0), np.empty(0))
+        out = dict.fromkeys(terms, empty)
+        tbl = self._pruned_read(
+            self._block_rgs, self.paths.blocks, terms,
+            ["kind", "term", "doc_lo", "doc_hi", "n", "ids_vb", "tfs_vb", "dls_vb"],
+            kind=0,
+            ranges_by_term={t: [(doc_lo, doc_hi - 1)] for t in terms},
+        )
+        if tbl is None:
+            return out
+        tbl = tbl.filter(
+            pc.and_(
+                pc.less_equal(tbl.column("doc_lo"), doc_hi - 1),
+                pc.greater_equal(tbl.column("doc_hi"), doc_lo),
             )
-        return cursors  # every present term has ≥1 superblock by construction
+        )
+        for t, (ids, tfs, dls) in self._decode_posting_table(tbl, terms).items():
+            a, b = np.searchsorted(ids, [doc_lo, doc_hi])
+            out[t] = (ids[a:b], tfs[a:b], dls[a:b])
+        return out
 
     def _idf(self, df: int) -> float:
         # N = LIVE docs: with tombstones pending this is the same integer a
@@ -984,8 +798,8 @@ class BlockIndexReader:
             self._result_cache.put(cache_key, [])
             return []
         # path routing (all paths are rank-identical; this is cost only):
-        # - conjunctive with a rare lead term → galloping intersection:
-        #   candidates bounded by min_df, ~5 µs per Python-loop step;
+        # - conjunctive with a rare lead term → lead-pruned fetch: decode
+        #   the rarest list and only the blocks covering its docIDs;
         # - TAAT while total postings are machine-reasonable (~25 ns/posting
         #   vectorized; memory O(candidates) via the compressed accumulator);
         # - block-at-a-time WAND above that (skips whole blocks without
@@ -996,83 +810,87 @@ class BlockIndexReader:
         taat_cost = total_df * 2.5e-8 + (
             self.n_docs * 1e-8 if self._flat_ok(total_df) else total_df * 6e-8
         )
-        if conjunctive:
-            # gallop iff the rarest list is small enough that Python-loop
-            # candidate stepping beats decoding every posting; a dense
-            # conjunction (min_df in the millions) MUST go vectorized —
-            # an unconditional gallop above the TAAT threshold measured
-            # 45-55 s/query on a 5M-doc dense corpus
-            path = "gallop" if gallop_cost < taat_cost else "taat"
-        elif total_df <= self.taat_threshold:
-            path = "taat"
-        else:
-            path = "wand"
-        if path == "taat":
+        if conjunctive and gallop_cost < taat_cost:
+            # the rare-lead route iff the rarest list is small enough that
+            # fetching per lead docID beats decoding every posting: a dense
+            # conjunction (min_df in the millions) covers every block of
+            # every term, which TAAT reads in fewer, larger scans
+            out = self._search_conjunctive(present, lex, k)
+        elif conjunctive or total_df <= self.taat_threshold:
             out = self._taat_route(present, lex, k, conjunctive, total_df)
-        elif path == "wand":
+        else:
             out = self._search_wand_blocks(present, lex, k)
             if out is None:  # block bounds don't prune → vectorized TAAT
                 out = self._taat_route(present, lex, k, False, total_df)
-        else:
-            cursors = self._cursors(present)
-            if not cursors:
-                self._result_cache.put(cache_key, [])
-                return []
-            heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap, ≤ k
-            self._search_conjunctive(cursors, k, heap)
-            ranked = sorted(((-s, -nd) for s, nd in heap))
-            out = [(i + 1, d, -negs) for i, (negs, d) in enumerate(ranked)]
         self._result_cache.put(cache_key, out)
         return out
 
-    def _search_taat(self, present, lex, k, conjunctive) -> list[tuple[int, int, float]]:
-        """Vectorized term-at-a-time scorer: full-list columnar decode
-        (cached), per-term numpy BM25 contribution with the SAME float
-        expression tree as the oracle, accumulation in sorted-term order
-        (= the oracle's float summation order, main.cpp:574), exact
-        (score DESC, doc_id ASC) top-k.
+    def _score_topk(self, arrays: dict, lex, k: int, conjunctive: bool,
+                    allow_flat: bool = True):
+        """THE term-at-a-time scorer core, shared by every TAAT-shaped route
+        (full lists, doc-range shards, the lead-pruned conjunction): term →
+        decoded (ids, tfs, dls) in, the exact (score DESC, doc_id ASC)
+        top-k out as (docs:int64[], scores:f64[]).
 
-        Accumulator: docIDs are dense [0, n_docs) by construction
-        (operators/docids.py), so while n_docs is driver-RAM-sized a flat
-        array is the fastest accumulator (O(Σ postings) scatter-adds, no
-        sort). Past ``dense_docs_max`` — or for queries too selective to
-        amortize the zero-fill — the candidate ids are compressed first
-        (np.unique) and accumulation happens in the compressed domain:
-        peak memory O(Σ candidate postings), independent of n_docs."""
-        arrays = self._fetch_arrays(present)
+        - contributions are per-term numpy BM25 with the SAME float
+          expression tree as the oracle, accumulated in sorted-term order
+          (= the oracle's float summation order, main.cpp:574);
+        - conjunctive mode keeps a doc only if it matches EVERY entry of
+          ``arrays`` — an empty entry (a term with no postings in the
+          fetcher's scope) rules every doc out;
+        - accumulator: docIDs are dense [0, n_docs) by construction
+          (operators/docids.py), so while n_docs is driver-RAM-sized a
+          flat array is the fastest (O(Σ postings) scatter-adds, no sort).
+          Past ``dense_docs_max``, for queries too selective to amortize
+          the zero-fill, or with ``allow_flat`` off (a doc-range shard
+          never allocates O(n_docs)), the candidate-compressed accumulator
+          keeps peak memory O(Σ candidate postings), independent of
+          n_docs."""
         per = []
-        total = 0
         for t in sorted(arrays):
             ids, tfs, dls = arrays[t]
-            idf = self._idf(int(lex[t]))
-            per.append((ids, idf * _tf_component(tfs, dls, self.avg_dl)))
-            total += len(ids)
-        if not per:
-            return []
-        n_terms = len(per)
-        if self._flat_ok(total):
-            score = np.zeros(self.n_docs)
+            if len(ids):
+                idf = self._idf(int(lex[t]))
+                per.append((ids, idf * _tf_component(tfs, dls, self.avg_dl)))
+        need = len(arrays) if conjunctive else 1
+        if not per or len(per) < need:
+            return np.empty(0, dtype=np.int64), np.empty(0)
+        if allow_flat and self._flat_ok(sum(len(ids) for ids, _ in per)):
+            s = np.zeros(self.n_docs)
             cnt = np.zeros(self.n_docs, dtype=np.int16)
-            for ids, contrib in per:  # sorted-term order fixes summation order
-                score[ids] += contrib  # each doc appears once per term: no races
+            for ids, contrib in per:
+                s[ids] += contrib  # each doc appears once per term: no races
                 cnt[ids] += 1
-            cand = np.nonzero(cnt == n_terms if conjunctive else cnt > 0)[0]
-            s = score[cand]
+            cand = np.nonzero(cnt >= need)[0]
+            s = s[cand]
         else:
-            cand = np.unique(np.concatenate([ids for ids, _ in per]))
-            s = np.zeros(len(cand))
-            cnt = np.zeros(len(cand), dtype=np.int16)
-            for ids, contrib in per:  # sorted-term order, same float tree
-                ix = np.searchsorted(cand, ids)
-                s[ix] += contrib
-                cnt[ix] += 1
+            cand, s, cnt = self._accumulate(per)
             if conjunctive:
-                m = cnt == n_terms
+                m = cnt >= need
                 cand, s = cand[m], s[m]
-        cand, s = self._topk_arrays(cand, s, k)
+        return self._topk_arrays(cand, s, k)
+
+    @staticmethod
+    def _accumulate(per: list[tuple[np.ndarray, np.ndarray]]):
+        """The candidate-compressed accumulator: [(ids, contribs)] in
+        sorted-term order → (cand, scores, match counts) over the sorted
+        unique candidate ids, scatter-added term by term (the oracle's
+        summation order). O(Σ postings) memory, never O(n_docs) — shared
+        by the TAAT core and the WAND batch scorer."""
+        cand = np.unique(np.concatenate([ids for ids, _ in per]))
+        s = np.zeros(len(cand))
+        cnt = np.zeros(len(cand), dtype=np.int16)
+        for ids, contrib in per:
+            ix = np.searchsorted(cand, ids)
+            s[ix] += contrib
+            cnt[ix] += 1
+        return cand, s, cnt
+
+    @staticmethod
+    def _ranked(cand: np.ndarray, s: np.ndarray) -> list[tuple[int, int, float]]:
+        """Top-k arrays in rank order → [(rank, doc_id, score)]."""
         return [
-            (i + 1, int(d), float(v))
-            for i, (d, v) in enumerate(zip(cand.tolist(), s.tolist()))
+            (i + 1, d, v) for i, (d, v) in enumerate(zip(cand.tolist(), s.tolist()))
         ]
 
     @staticmethod
@@ -1092,8 +910,10 @@ class BlockIndexReader:
         sel = np.lexsort((cand, -s))[:kk]
         return cand[sel], s[sel]
 
-    # ---- within-query parallel decode (dense-term cold queries) -----------
     def _taat_route(self, present, lex, k, conjunctive, total_df):
+        """Term-at-a-time over the full posting lists: the cached full-list
+        fetch into the shared scorer, or — for a dense query on a reader
+        with ``parallel_workers`` — the same scorer sharded by doc range."""
         if (
             self.parallel_workers > 0
             and total_df >= self.parallel_df_threshold
@@ -1101,8 +921,10 @@ class BlockIndexReader:
         ):
             self.last_parallel = True
             return self._search_taat_parallel(present, lex, k, conjunctive)
-        return self._search_taat(present, lex, k, conjunctive)
+        arrays = self._fetch_arrays(present)
+        return self._ranked(*self._score_topk(arrays, lex, k, conjunctive))
 
+    # ---- within-query parallel decode (dense-term cold queries) -----------
     def _ensure_pool(self):
         """FORK worker pool (not spawn/forkserver): those two re-execute the
         caller's main script in every worker (spawn.prepare →
@@ -1157,69 +979,9 @@ class BlockIndexReader:
             if hi > lo
         ]
         parts = pool.map(_parallel_taat_worker, args)
-        docs = [p[0] for p in parts if len(p[0])]
-        if not docs:
-            return []
-        cand = np.concatenate(docs)
-        s = np.concatenate([p[1] for p in parts if len(p[0])])
-        cand, s = self._topk_arrays(cand, s, k)
-        return [
-            (i + 1, int(d), float(v))
-            for i, (d, v) in enumerate(zip(cand.tolist(), s.tolist()))
-        ]
-
-    def _taat_range_topk(self, terms, k, conjunctive, doc_lo, doc_hi):
-        """One shard's exact TAAT top-k over docIDs in [doc_lo, doc_hi):
-        range-pruned leaf read (row groups outside the range never decode —
-        the doc_lo statistics prune within single-term groups), candidate-
-        compressed accumulation in sorted-term order, shared comparator.
-        Returns (docs:int64[], scores:f64[]) ready for the exact merge."""
-        lex = self.lexicon_rows(terms)
-        present = [t for t in terms if t in lex]
-        empty = (np.empty(0, dtype=np.int64), np.empty(0))
-        if not present:
-            return empty
-        tbl = self._pruned_read(
-            self._block_rgs, self.paths.blocks, present,
-            ["kind", "term", "doc_lo", "doc_hi", "n", "ids_vb", "tfs_vb", "dls_vb"],
-            kind=0,
-            ranges_by_term={t: [(doc_lo, doc_hi - 1)] for t in present},
-        )
-        if tbl is None:
-            return empty
-        mask = pc.and_(
-            pc.less_equal(tbl.column("doc_lo"), doc_hi - 1),
-            pc.greater_equal(tbl.column("doc_hi"), doc_lo),
-        )
-        tbl = tbl.filter(mask)
-        if tbl.num_rows == 0:
-            return empty
-        arrays = self._decode_posting_table(tbl, present)
-        per = []
-        for t in sorted(arrays):  # sorted-term order = oracle summation order
-            ids, tfs, dls = arrays[t]
-            a = int(np.searchsorted(ids, doc_lo, side="left"))
-            b = int(np.searchsorted(ids, doc_hi, side="left"))
-            if a == b:
-                continue
-            ids, tfs, dls = ids[a:b], tfs[a:b], dls[a:b]
-            idf = self._idf(int(lex[t]))
-            per.append((ids, idf * _tf_component(tfs, dls, self.avg_dl)))
-        if not per:
-            return empty
-        cand = np.unique(np.concatenate([ids for ids, _ in per]))
-        s = np.zeros(len(cand))
-        cnt = np.zeros(len(cand), dtype=np.int16)
-        for ids, contrib in per:
-            ix = np.searchsorted(cand, ids)
-            s[ix] += contrib
-            cnt[ix] += 1
-        if conjunctive:
-            # a doc must carry ALL present terms GLOBALLY; terms with no
-            # postings in this shard make that impossible for its docs
-            m = cnt == len(present) if len(per) == len(present) else cnt < 0
-            cand, s = cand[m], s[m]
-        return self._topk_arrays(cand, s, k)
+        cand = np.concatenate([p[0] for p in parts])
+        s = np.concatenate([p[1] for p in parts])
+        return self._ranked(*self._topk_arrays(cand, s, k))
 
     def _search_wand_blocks(self, present, lex, k):
         """Two-level block-max WAND (disjunctive): superblock pruning first,
@@ -1268,124 +1030,66 @@ class BlockIndexReader:
                 continue
             los, his, ns, mx, mn = sbm
             idf = self._idf(int(lex[t]))
-            # _bf_hi/_bf_lo: tombstone avg_dl drift factors (1.0 when no
-            # deletes) — keep stored build-time bounds valid upper bounds
-            metas.append((
-                t, idf, los, his,
-                np.maximum(idf * mx * self._bf_hi, idf * mn * self._bf_lo),
-                ns,
-            ))
+            metas.append((t, idf, los, his, self._ubs(idf, mx, mn), ns))
         if not metas:
             return []
         bounds = np.unique(
             np.concatenate([np.concatenate((m[2], m[3] + 1)) for m in metas])
         )
-        starts = bounds[:-1]
-        n_int = len(starts)
-        total_ub = np.zeros(n_int)
-        est_cost = np.zeros(n_int)
-        covers = []
-        for _t, idf, los, his, ubs, ns in metas:
-            ci = np.searchsorted(his, starts, side="left")
-            cis = np.minimum(ci, len(his) - 1)
-            covered = (ci < len(his)) & (los[cis] <= starts)
-            covers.append(np.where(covered, cis, -1))
-            total_ub += np.where(covered, np.maximum(ubs[cis], 0.0), 0.0)
-            est_cost += np.where(covered, ns[cis], 0)
-        order = np.argsort(-total_ub, kind="stable")
-        ub_sorted = total_ub[order]
-        cum_cost = np.cumsum(est_cost[order])
+        n_int = len(bounds) - 1
+        covers, total_ub, est_cost = self._interval_bounds(
+            [m[2:] for m in metas], bounds[:-1]
+        )
         heap: list[tuple[float, int]] = []
         in_batch = np.zeros(n_int, dtype=bool)
         decoded: list[dict] = [dict() for _ in metas]  # (sb, leaf) → arrays
-        pos = 0
-        budget = float(max(64 * k, 1024))
         scored_postings = 0  # instrumentation: how much pruning bought
-        while pos < n_int:
-            theta = heap[0][0] if len(heap) == k else -math.inf
-            if ub_sorted[pos] < theta:
-                break  # desc order ⇒ everything left is strictly below θ
-            if len(heap) == k:
-                # pruning-effectiveness check: if most intervals survive θ
-                # and a flat accumulator is affordable, TAAT wins — bail
-                # (wasted work so far is bounded by the geometric budget)
-                n_sel = int(np.searchsorted(-ub_sorted, -theta, side="right")) - pos
-                if n_sel > 0.5 * n_int and self.n_docs <= self.dense_docs_max:
-                    return None
-            # batch = next intervals in bound order up to the posting budget
-            tgt = (cum_cost[pos - 1] if pos else 0.0) + budget
-            end = min(max(int(np.searchsorted(cum_cost, tgt, side="left")) + 1, pos + 1), n_int)
-            if len(heap) == k:
-                cut = int(np.searchsorted(-ub_sorted[pos:end], -theta, side="right"))
-                end = pos + max(cut, 1)
-            sel = order[pos:end]
-            pos = end
-            budget *= 4
+        for sel, n_alive in self._batches(
+            np.argsort(-total_ub, kind="stable"), total_ub, est_cost, heap, k
+        ):
+            # pruning-effectiveness check: if most intervals survive θ and
+            # a flat accumulator is affordable, TAAT wins — bail (wasted
+            # work so far is bounded by the geometric budget)
+            if (
+                len(heap) == k
+                and n_alive > 0.5 * n_int
+                and self.n_docs <= self.dense_docs_max
+            ):
+                return None
             in_batch[:] = False
             in_batch[sel] = True
             # ---- leaf fetch: exactly the superblocks covering the batch
-            needs = []
-            wants = []
-            for (t, _idf, los, his, _ubs, _ns), cover in zip(metas, covers):
-                civ = cover[sel]
-                need = np.unique(civ[civ >= 0])
-                needs.append(need)
-                grab = (
-                    range(len(los))
-                    if len(los) <= self.prefetch_sbs
-                    else need.tolist()
-                )
-                for si in grab:
-                    if ("leaf", t, si) not in self._posting_cache:
-                        wants.append((t, si, int(los[si]), int(his[si])))
-            self._fetch_leaf_batch(wants)
+            needs = [np.unique(c[sel][c[sel] >= 0]).tolist() for c in covers]
+            leaves = self._leaves({m[0]: need for m, need in zip(metas, needs)}, sbms)
             # ---- leaf-level refinement inside the selected intervals
             # interval i = [bounds[i], bounds[i+1]) — include both edges so
             # no leaf interval straddles a selected-interval boundary
             lb = [bounds[sel], bounds[sel + 1]]
-            leafs = []  # per term: (leaf_los, leaf_his, leaf_ubs, sb_of, j_of)
-            for (t, idf, _los, _his, _ubs, _ns), need in zip(metas, needs):
-                if need.size == 0:
+            leafs = []  # per term: (los, his, ubs, ns, [(sb, leaf, j)]) of its leaf blocks
+            for (t, idf, *_m), need in zip(metas, needs):
+                if not need:
                     leafs.append(None)
                     continue
-                parts = [self._leaf_for(t, int(si)) for si in need.tolist()]
+                parts = [leaves[(t, si)] for si in need]
                 llos = np.concatenate([pt.los for pt in parts])
                 lhis = np.concatenate([pt.his for pt in parts])
-                lubs = np.concatenate(
-                    [
-                        np.maximum(
-                            idf * pt.max_tfc * self._bf_hi,
-                            idf * pt.min_tfc * self._bf_lo,
-                        )
-                        for pt in parts
-                    ]
-                )
-                lns = np.concatenate([pt.ns for pt in parts])
-                sb_of = np.repeat(need, [len(pt.los) for pt in parts])
-                j_of = np.concatenate(
-                    [np.arange(len(pt.los), dtype=np.int64) for pt in parts]
-                )
-                leafs.append((llos, lhis, lubs, lns, sb_of, j_of))
+                leafs.append((
+                    llos,
+                    lhis,
+                    np.concatenate(
+                        [self._ubs(idf, pt.max_tfc, pt.min_tfc) for pt in parts]
+                    ),
+                    np.concatenate([pt.ns for pt in parts]),
+                    [(si, pt, j) for si, pt in zip(need, parts) for j in range(len(pt.los))],
+                ))
                 lb.append(llos)
                 lb.append(lhis + 1)
             lbounds = np.unique(np.concatenate(lb))
             lstarts = lbounds[:-1]
-            iv = np.searchsorted(bounds, lstarts, side="right") - 1
-            inside = in_batch[iv]
-            l_ub = np.zeros(len(lstarts))
-            l_cost = np.zeros(len(lstarts))
-            lcovers = []
-            for leaf in leafs:
-                if leaf is None:
-                    lcovers.append(None)
-                    continue
-                llos, lhis, lubs, lns, _sb_of, _j_of = leaf
-                ci = np.searchsorted(lhis, lstarts, side="left")
-                cis = np.minimum(ci, len(lhis) - 1)
-                covered = (ci < len(lhis)) & (llos[cis] <= lstarts)
-                lcovers.append(np.where(covered, cis, -1))
-                l_ub += np.where(covered, np.maximum(lubs[cis], 0.0), 0.0)
-                l_cost += np.where(covered, lns[cis], 0.0)
+            inside = in_batch[np.searchsorted(bounds, lstarts, side="right") - 1]
+            lcovers, l_ub, l_cost = self._interval_bounds(
+                [None if lf is None else lf[:4] for lf in leafs], lstarts
+            )
             # ---- inner leaf-level loop: same descending-bound batching as
             # the outer loop, but over leaf intervals — θ updates BETWEEN
             # sub-batches, so leaf-granularity pruning engages even while
@@ -1393,31 +1097,10 @@ class BlockIndexReader:
             # superblock batch would decode ~16384 postings before the
             # first θ exists)
             l_idx = np.nonzero(inside)[0]
-            if len(l_idx) == 0:
-                continue
-            lorder = l_idx[np.argsort(-l_ub[l_idx], kind="stable")]
-            lub_sorted = l_ub[lorder]
-            lcum = np.cumsum(l_cost[lorder])
-            lpos = 0
-            lbudget = float(max(64 * k, 1024))
             alive = np.zeros(len(lstarts), dtype=bool)
-            while lpos < len(lorder):
-                theta = heap[0][0] if len(heap) == k else -math.inf
-                if lub_sorted[lpos] < theta:
-                    break
-                ltgt = (lcum[lpos - 1] if lpos else 0.0) + lbudget
-                lend = min(
-                    max(int(np.searchsorted(lcum, ltgt, side="left")) + 1, lpos + 1),
-                    len(lorder),
-                )
-                if len(heap) == k:
-                    cut = int(
-                        np.searchsorted(-lub_sorted[lpos:lend], -theta, side="right")
-                    )
-                    lend = lpos + max(cut, 1)
-                lsel = lorder[lpos:lend]
-                lpos = lend
-                lbudget *= 4
+            for lsel, _ in self._batches(
+                l_idx[np.argsort(-l_ub[l_idx], kind="stable")], l_ub, l_cost, heap, k
+            ):
                 alive[:] = False
                 alive[lsel] = True
                 # ---- decode + gather (sorted-term order)
@@ -1427,88 +1110,105 @@ class BlockIndexReader:
                 ):
                     if leaf is None:
                         continue
-                    _llos, _lhis, _lubs, _lns, sb_of, j_of = leaf
                     cb = lcover[lsel]
-                    needb = np.unique(cb[cb >= 0])
-                    if needb.size == 0:
+                    needb = np.unique(cb[cb >= 0]).tolist()
+                    if not needb:
                         continue
-                    miss = [
-                        ci
-                        for ci in needb.tolist()
-                        if (int(sb_of[ci]), int(j_of[ci])) not in dec
-                    ]
+                    refs = [leaf[4][ci] for ci in needb]
+                    miss = [r for r in refs if (r[0], r[2]) not in dec]
                     if miss:
-                        # ONE concatenated vb_decode per column for all
-                        # missing blocks (per-block decode calls have
-                        # ~10 µs fixed cost)
-                        mparts = [
-                            self._leaf_for(t, int(sb_of[ci])) for ci in miss
-                        ]
-                        mjs = [int(j_of[ci]) for ci in miss]
-                        mns = np.array(
-                            [int(pt.ns[j]) for pt, j in zip(mparts, mjs)],
-                            dtype=np.int64,
+                        # ONE concatenated decode for all missing blocks
+                        ids, tfs, dls, bnd = self._decode_blocks(
+                            *_leaf_columns([(pt, j) for _si, pt, j in miss])
                         )
-                        st = np.concatenate(([0], np.cumsum(mns)[:-1]))
-                        raw = vb_decode(
-                            b"".join(pt.ids_vb[j] for pt, j in zip(mparts, mjs))
-                        )
-                        cs = np.cumsum(raw, dtype=np.uint64)
-                        mlos = np.array(
-                            [int(pt.los[j]) for pt, j in zip(mparts, mjs)],
-                            dtype=np.uint64,
-                        )
-                        # block-head gap is from (doc_lo - 1) — fold the
-                        # base back in
-                        off = cs[st] - raw[st] + np.uint64(1) - mlos
-                        ids_all = (cs - np.repeat(off, mns)).astype(np.int64)
-                        tfs = vb_decode(
-                            b"".join(pt.tfs_vb[j] for pt, j in zip(mparts, mjs))
-                        ).astype(np.float64)
-                        dls = vb_decode(
-                            b"".join(pt.dls_vb[j] for pt, j in zip(mparts, mjs))
-                        ).astype(np.float64)
-                        contrib_all = idf * _tf_component(tfs, dls, self.avg_dl)
-                        dkeep = self._del_mask(ids_all)
-                        for jj, ci in enumerate(miss):
-                            s0, s1 = int(st[jj]), int(st[jj] + mns[jj])
-                            if dkeep is None:
-                                dec[(int(sb_of[ci]), int(j_of[ci]))] = (
-                                    ids_all[s0:s1],
-                                    contrib_all[s0:s1],
-                                )
-                            else:  # tombstoned postings never score
-                                kk = dkeep[s0:s1]
-                                dec[(int(sb_of[ci]), int(j_of[ci]))] = (
-                                    ids_all[s0:s1][kk],
-                                    contrib_all[s0:s1][kk],
-                                )
-                    keys = [
-                        (int(sb_of[ci]), int(j_of[ci])) for ci in needb.tolist()
-                    ]
-                    ids = np.concatenate([dec[ky][0] for ky in keys])
-                    co = np.concatenate([dec[ky][1] for ky in keys])
-                    liv = np.searchsorted(lbounds, ids, side="right") - 1
-                    keep = alive[liv]
+                        co = idf * _tf_component(tfs, dls, self.avg_dl)
+                        for jj, (si, _pt, j) in enumerate(miss):
+                            s0, s1 = bnd[jj], bnd[jj + 1]
+                            dec[(si, j)] = (ids[s0:s1], co[s0:s1])
+                    ids = np.concatenate([dec[(si, j)][0] for si, _pt, j in refs])
+                    co = np.concatenate([dec[(si, j)][1] for si, _pt, j in refs])
+                    keep = alive[np.searchsorted(lbounds, ids, side="right") - 1]
                     if keep.any():
                         gathered.append((ids[keep], co[keep]))
                 if not gathered:
                     continue
                 scored_postings += sum(len(ids) for ids, _ in gathered)
-                cand = np.unique(np.concatenate([ids for ids, _ in gathered]))
-                acc = np.zeros(len(cand))
-                for ids, co in gathered:  # sorted-term order = oracle order
-                    acc[np.searchsorted(cand, ids)] += co
+                cand, acc, _ = self._accumulate(gathered)  # sorted-term order
                 if len(heap) == k:
-                    m = acc >= theta  # strict-< prune; == θ ties still pushed
+                    m = acc >= heap[0][0]  # strict-< prune; == θ ties still pushed
                     cand, acc = cand[m], acc[m]
-                for d, s in zip(cand.tolist(), acc.tolist()):
-                    self._push(heap, k, s, d)
+                for d, sc in zip(cand.tolist(), acc.tolist()):
+                    self._push(heap, k, sc, d)
         # exposed for tests/diagnostics: postings actually decoded+scored
         # vs the query's total df — the measure of block-max pruning
         self.last_wand_scored = scored_postings
-        ranked = sorted(((-s, -nd) for s, nd in heap))
+        ranked = sorted(((-sc, -nd) for sc, nd in heap))
         return [(i + 1, d, -negs) for i, (negs, d) in enumerate(ranked)]
+
+    def _ubs(self, idf, max_tfc, min_tfc):
+        """Per-block BM25 upper bounds from the stored tf-component block
+        max/min. _bf_hi/_bf_lo are the tombstone avg_dl drift factors (1.0
+        when no deletes) that keep build-time bounds valid upper bounds."""
+        return np.maximum(idf * max_tfc * self._bf_hi, idf * min_tfc * self._bf_lo)
+
+    @staticmethod
+    def _cover(los, his, xs):
+        """Index of the interval [los[i], his[i]] containing each x, -1
+        where none does (intervals sorted and disjoint)."""
+        if len(his) == 0:
+            return np.full(len(xs), -1)
+        ci = np.searchsorted(his, xs, side="left")
+        cis = np.minimum(ci, len(his) - 1)
+        return np.where((ci < len(his)) & (los[cis] <= xs), cis, -1)
+
+    def _interval_bounds(self, levels, starts):
+        """Block-max bounds of the elementary intervals beginning at
+        ``starts``. ``levels``: per term (los, his, ubs, ns) block arrays,
+        or None. → (per-term covering-block index, -1 where none; Σ_t
+        max(ub, 0); Σ_t n). max(·, 0) because membership is unknown: an
+        absent doc contributes exactly 0, which also keeps negative-IDF
+        bounds valid (SURVEY.md §4.4)."""
+        ub = np.zeros(len(starts))
+        cost = np.zeros(len(starts))
+        covers = []
+        for lv in levels:
+            if lv is None:
+                covers.append(None)
+                continue
+            los, his, ubs, ns = lv
+            c = self._cover(los, his, starts)
+            covers.append(c)
+            ub += np.where(c >= 0, np.maximum(ubs[c], 0.0), 0.0)
+            cost += np.where(c >= 0, ns[c], 0.0)
+        return covers, ub, cost
+
+    @staticmethod
+    def _batches(order, ub, cost, heap, k):
+        """Batches of the intervals ``order`` (descending bound) under a
+        geometrically growing posting budget, each cut where the bound
+        drops below θ (≥ 1 interval). θ is re-read from ``heap`` before
+        every batch; the walk stops once the next bound is strictly below
+        θ — every unscored doc then scores < θ, so it can neither enter the
+        top k nor tie. Yields (batch, intervals left with bound ≥ θ)."""
+        ub_sorted = ub[order]
+        cum = np.cumsum(cost[order])
+        pos, budget = 0, float(max(64 * k, 1024))
+        while pos < len(order):
+            theta = heap[0][0] if len(heap) == k else -math.inf
+            if ub_sorted[pos] < theta:
+                return
+            n_alive = int(np.searchsorted(-ub_sorted, -theta, side="right")) - pos
+            tgt = (cum[pos - 1] if pos else 0.0) + budget
+            end = min(
+                max(int(np.searchsorted(cum, tgt, side="left")) + 1, pos + 1),
+                len(order),
+            )
+            if len(heap) == k:
+                cut = int(np.searchsorted(-ub_sorted[pos:end], -theta, side="right"))
+                end = pos + max(cut, 1)
+            yield order[pos:end], n_alive
+            pos = end
+            budget *= 4
 
     @staticmethod
     def _push(heap, k, score, doc_id):
@@ -1518,35 +1218,57 @@ class BlockIndexReader:
         elif item > heap[0]:
             heapq.heapreplace(heap, item)
 
-    @staticmethod
-    def _exact_score(at_doc: list[TermCursor]) -> float:
-        # sorted-term float summation order (main.cpp:574)
-        score = 0.0
-        for c in sorted(at_doc, key=lambda c: c.term):
-            score += c.contrib()
-        return score
+    def _search_conjunctive(self, present, lex, k):
+        """Conjunction with a rare lead term (``search`` routes here while
+        min_df is small) — a lead-pruned fetch feeding the shared scorer:
 
-    def _search_conjunctive(self, cursors, k, heap):
-        cursors.sort(key=lambda c: c.df)  # rarest first → fewest candidates
-        lead = cursors[0]
-        d = lead.cur_doc()
-        while d < INF:
-            aligned = True
-            for c in cursors[1:]:
-                got = c.next_geq(d)
-                if got != d:
-                    d = lead.next_geq(got)
-                    aligned = False
-                    break
-            if aligned:
-                # block-max prune: skip exact scoring if even the bound loses
-                if len(heap) == k:
-                    ub = sum(c.block_ub() for c in cursors)
-                    if ub < heap[0][0]:
-                        d = lead.advance()
-                        continue
-                self._push(heap, k, self._exact_score(cursors), d)
-                d = lead.advance()
+        1. decode the rarest (lead) term's whole list;
+        2. fetch each other term's superblocks covering a lead docID (the
+           whole term while it has ≤ ``prefetch_sbs`` superblocks — a
+           bounded eager read later queries reuse) in ONE batched read;
+        3. decode, per term, only the leaf blocks whose [doc_lo, doc_hi]
+           contains a lead docID — one concatenated decode per column.
+
+        Exact: every doc of the conjunction is a lead doc, and every other
+        term's posting at a lead doc lies in the leaf block covering it. A
+        dense term's other leaf blocks — and the leaf data of its other
+        superblocks — are never read."""
+        sbms = self._fetch_superblocks(present)
+        present = [t for t in present if t in sbms]
+        if not present:
+            return []
+        lead = min(present, key=lambda t: int(lex[t]))
+        leaves = self._leaves({lead: range(len(sbms[lead][0]))}, sbms)
+        ids, tfs, dls, _ = self._decode_blocks(
+            *_leaf_columns([(lf, j) for lf in leaves.values() for j in range(len(lf.los))])
+        )
+        arrays = {lead: (ids, tfs, dls)}
+        docs = ids
+        covers = {}
+        for t in present:
+            if t != lead:
+                c = self._cover(sbms[t][0], sbms[t][1], docs)
+                covers[t] = np.unique(c[c >= 0]).tolist()
+        leaves = self._leaves(covers, sbms)
+        for t, need in covers.items():
+            if not need:
+                return []
+            parts = [leaves[(t, si)] for si in need]
+            refs = [(pt, j) for pt in parts for j in range(len(pt.los))]
+            c = self._cover(
+                np.concatenate([pt.los for pt in parts]),
+                np.concatenate([pt.his for pt in parts]),
+                docs,
+            )
+            ids, tfs, dls, _ = self._decode_blocks(
+                *_leaf_columns([refs[b] for b in np.unique(c[c >= 0]).tolist()])
+            )
+            # only lead docs can match: drop the blocks' other postings
+            m = docs[np.minimum(np.searchsorted(docs, ids), len(docs) - 1)] == ids
+            if not m.any():
+                return []
+            arrays[t] = (ids[m], tfs[m], dls[m])
+        return self._ranked(*self._score_topk(arrays, lex, k, conjunctive=True))
 
     # ---- result assembly (the reference's primary user surface) -----------
     def match_count(self, query: str, conjunctive: bool = True) -> int:
@@ -1687,5 +1409,14 @@ def _parallel_worker_init(root: str) -> None:
 
 
 def _parallel_taat_worker(args):
+    """One shard's exact local top-k over docIDs in [doc_lo, doc_hi): the
+    doc-range fetch into the shared scorer, never a flat O(n_docs)
+    accumulator → (docs:int64[], scores:f64[]) for the exact merge."""
     terms, k, conjunctive, doc_lo, doc_hi = args
-    return _PW_READER._taat_range_topk(terms, k, conjunctive, doc_lo, doc_hi)
+    r = _PW_READER
+    lex = r.lexicon_rows(terms)
+    present = [t for t in terms if t in lex]
+    return r._score_topk(
+        r._fetch_range(present, doc_lo, doc_hi), lex, k, conjunctive,
+        allow_flat=False,
+    )

@@ -155,6 +155,21 @@ class BlockIndexPaths:
         physically rewrites the index."""
         return self._child("deletes")
 
+    def live_deletes(self) -> str | None:
+        """The tombstone sidecar directory a reader should trust right now:
+        ``deletes/`` when present, else the crash-recovery ``deletes.prev/``
+        (a process killed between the two renames of the tombstone swap
+        leaves the old complete state there — see
+        delete_index.tombstone_delete), else None. Read-only; the next
+        tombstone_delete physically heals the rename. Filesystem roots
+        only: a table identifier has no sidecar."""
+        if is_table_identifier(self.root):
+            return None
+        for d in (self.deletes, self.deletes + ".prev"):
+            if os.path.isdir(os.path.join(d, "meta")):
+                return d
+        return None
+
 
 def _clear_stale_deletes(paths: BlockIndexPaths) -> None:
     """Remove a leftover tombstone sidecar (plans/delete_index.py) before

@@ -104,26 +104,10 @@ def delete_paths(paths: BlockIndexPaths, base: str | None = None) -> tuple[str, 
     return os.path.join(d, "ids"), os.path.join(d, "df_corr"), os.path.join(d, "meta")
 
 
-def live_deletes_dir(root: str) -> str | None:
-    """The sidecar directory a READER should trust right now: ``deletes/``
-    when present, else the crash-recovery ``deletes.prev/`` (a process
-    killed between the two renames of the tombstone swap leaves the old
-    complete state there — see tombstone_delete), else None. Read-only;
-    the next tombstone_delete physically heals the rename."""
-    if is_table_identifier(root):
-        return None
-    d = BlockIndexPaths(root).deletes
-    if os.path.isdir(os.path.join(d, "meta")):
-        return d
-    if os.path.isdir(os.path.join(d + ".prev", "meta")):
-        return d + ".prev"
-    return None
-
-
 def has_tombstones(root: str) -> bool:
     """True iff ``root`` carries a tombstone sidecar with ≥1 deleted doc.
     Cheap (reads one tiny meta table) — used by merge/compaction guards."""
-    d = live_deletes_dir(root)
+    d = BlockIndexPaths(root).live_deletes()
     if d is None:
         return False
     import pyarrow.dataset as ds
@@ -307,7 +291,7 @@ def tombstone_delete(
         # crash-recovery name ``deletes.prev``: every reachable state is
         # safe — an exception restores the old dir here, and a hard KILL
         # between the two renames leaves the old state at deletes.prev,
-        # which readers trust (live_deletes_dir) and the next
+        # which readers trust (BlockIndexPaths.live_deletes) and the next
         # tombstone_delete physically restores (_heal_deletes_swap)
         tmp = paths.deletes + f".tmp{os.getpid()}"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -472,15 +456,15 @@ def purge_deletes(
         )
     paths = BlockIndexPaths(index_dir)
     out_p = BlockIndexPaths(out_dir)
-    _clear_stale_deletes(out_p)  # reused out_dir: see block_index note
+    # validate index_dir completely BEFORE touching out_dir: with the two
+    # arguments swapped, clearing out_dir first would wipe the live
+    # index's tombstone sidecar (un-deleting its docs) and only then fail
     if not has_tombstones(index_dir):
         raise ValueError(
             f"index at {index_dir} has no tombstones to purge "
             "(tombstone_delete first, or just copy the index)"
         )
-    ids_p, dfc_p, meta_p = delete_paths(
-        paths, base=live_deletes_dir(index_dir)
-    )
+    ids_p, dfc_p, meta_p = delete_paths(paths, base=paths.live_deletes())
     dm = read_table(spark, meta_p, schema=DEL_META_SCHEMA).collect()[0]
     n_deleted, deleted_dl, total_dl = (
         int(dm["n_deleted"]), int(dm["deleted_dl"]), int(dm["total_dl"])
@@ -488,6 +472,7 @@ def purge_deletes(
     meta = read_table(spark, paths.meta).collect()[0].asDict()
     if int(meta.get("block_format", 1)) != 3:
         raise ValueError("purge requires a block_format-3 index")
+    _clear_stale_deletes(out_p)  # reused out_dir: see block_index note
     block_size = int(meta["block_size"])
     n_buckets = int(meta["n_buckets"])
     n_live = int(meta["n_docs"]) - n_deleted

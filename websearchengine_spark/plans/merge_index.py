@@ -453,7 +453,6 @@ def merge_many_block_indexes(
         _remap_doc_ids,
         delete_paths,
         has_tombstones,
-        live_deletes_dir,
     )
 
     if not purge_tombstones:
@@ -470,9 +469,6 @@ def merge_many_block_indexes(
                 )
     in_ps = [BlockIndexPaths(d) for d in input_dirs]
     out_p = BlockIndexPaths(out_dir)
-    _clear_stale_deletes(out_p)  # a reused out_dir may hold a previous
-    #                              index's tombstone sidecar — stale ids
-    #                              would silently mask the merged axis
     metas = [read_table(spark, p.meta).collect()[0].asDict() for p in in_ps]
     for m, d in zip(metas, input_dirs):
         if int(m.get("block_format", 1)) != 3:
@@ -481,6 +477,10 @@ def merge_many_block_indexes(
     block_sizes = {int(m["block_size"]) for m in metas}
     if len(block_sizes) > 1:
         raise ValueError("block_size mismatch between input indexes")
+    # inputs validated — only now touch out_dir. A reused out_dir may hold
+    # a previous index's tombstone sidecar: stale ids would silently mask
+    # the merged axis
+    _clear_stale_deletes(out_p)
     block_size = block_sizes.pop()
     n_buckets = n_buckets or int(metas[0]["n_buckets"])
     # per-input tombstone state (purge_tombstones=True): sorted deleted-id
@@ -490,7 +490,7 @@ def merge_many_block_indexes(
     del_state = []
     for d, p in zip(input_dirs, in_ps):
         if purge_tombstones and has_tombstones(d):
-            ids_p, dfc_p, dmeta_p = delete_paths(p, base=live_deletes_dir(d))
+            ids_p, dfc_p, dmeta_p = delete_paths(p, base=p.live_deletes())
             dm = read_table(spark, dmeta_p, schema=DEL_META_SCHEMA).collect()[0]
             arr = np.sort(
                 read_table(spark, ids_p, schema=DEL_IDS_SCHEMA)
